@@ -10,6 +10,10 @@ Scale design notes, since dedup is the classic 100 TB trap:
 * Signatures (MinHash, SimHash, fingerprints) are computed **narrow**
   — nested higher-order functions over the token array, zero shuffle,
   zero Python. Only the tiny (doc_id, signature) relation shuffles.
+* Every shingle consumer goes through ONE kernel,
+  :func:`shingle_hashes`, which tokenizes each document once into a
+  bound column before the n-gram lambda reads it (and one oracle CTE
+  builder, :func:`duck_shingles`, mirrors it in DuckDB).
 * Candidate generation is always **blocked** (LSH band buckets /
   shingle blocks), never a cross join: cost is Σ bucket² instead of
   n². Bucket skew is the residual risk — AQE skew-join handles
@@ -23,6 +27,7 @@ Scale design notes, since dedup is the classic 100 TB trap:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +38,7 @@ from sfdc_cdc_aws_spark.operators.text import (
     _DUCK_TOKENS,
     shared_hash64,
     tokens_col,
+    word_ngrams,
 )
 from sfdc_cdc_aws_spark.sources import load_table
 
@@ -95,29 +101,72 @@ def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH
+# the shingle kernel: tokenize once, hash distinct word n-grams
 # ---------------------------------------------------------------------------
 
-def _word_shingles(n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the tokenized text (narrow)."""
-    t = tokens_col()
-    grams = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(t, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
+def shingle_hashes(
+    df: DataFrame,
+    n: int,
+    hash_fn: Callable[[Column], Column] | None = shared_hash64,
+    keep_cols: tuple[str, ...] = ("doc_id",),
+    explode: bool = True,
+) -> DataFrame:
+    """The distinct word n-grams of ``text`` for every row with at
+    least n tokens, each passed through ``hash_fn`` (None keeps the
+    strings): one row per shingle ``(*keep_cols, h)``, or with
+    ``explode=False`` one array per row ``(*keep_cols, hs)``. Every
+    shingle consumer in the engine goes through here; its DuckDB twin
+    is :func:`duck_shingles`.
+
+    The tokens are BOUND to a column (``_t``) before the n-gram lambda
+    reads them (see ``text.word_ngrams``). Captured as an expression
+    instead, Catalyst inlines the whole tokenizer into every
+    ``element_at`` of the lambda and re-tokenizes each document about
+    n x |tokens| times: quadratic in document length, and a larger
+    cost than md5 or the higher-order functions themselves.
+    ``CollapseProject`` keeps the binding Project: ``_t`` is
+    referenced several times and is not cheap to inline. A stateless
+    projection, so readStream inputs stay valid."""
+    toks = df.select(*keep_cols, tokens_col().alias("_t")).where(F.size("_t") >= n)
+    hs = F.array_distinct(word_ngrams(F.col("_t"), n))
+    if hash_fn is not None:
+        hs = F.transform(hs, hash_fn)
+    return toks.select(*keep_cols, F.explode(hs).alias("h") if explode else hs.alias("hs"))
 
 
-_DUCK_SHINGLES3 = (
-    f"list_distinct(list_transform(generate_series(1, len(t) - 2), "
-    f"i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))"
-)
+def duck_shingles(
+    name: str,
+    n: int,
+    cols: str = "doc_id",
+    hash_sql: str | None = DUCK_HASH64,
+    out: str = "h",
+    explode: bool = True,
+) -> str:
+    """DuckDB twin of :func:`shingle_hashes`: the oracle CTE ``name``
+    with the distinct word n-grams of every document with at least n
+    tokens, hashed by the ``hash_sql`` template over ``{expr}`` (None
+    keeps the strings), one row per shingle (``out``) or, without
+    ``explode``, one list per document."""
+    gram = " || ' ' || ".join(["t[i]"] + [f"t[i+{j}]" for j in range(1, n)])
+    grams = (
+        f"list_distinct(list_transform(generate_series(1, len(t) - {n - 1}),\n"
+        f"             i -> {gram}))"
+    )
+    if hash_sql is not None:
+        grams = f"list_transform({grams},\n             g -> {hash_sql.format(expr='g')})"
+    if explode:
+        grams = f"unnest({grams})"
+    return f"""{name} AS (
+  SELECT {cols},
+         {grams} AS {out}
+  FROM (SELECT {cols}, {_DUCK_TOKENS} AS t FROM documents)
+  WHERE len(t) >= {n}
+)"""
 
+
+# ---------------------------------------------------------------------------
+# MinHash + LSH
+# ---------------------------------------------------------------------------
 
 def minhash_sig_df(d: DataFrame) -> DataFrame:
     """MinHash signatures over any DataFrame with (doc_id, text) —
@@ -125,17 +174,15 @@ def minhash_sig_df(d: DataFrame) -> DataFrame:
     expressions). (doc_id, sig: array<bigint> of N_HASHES minhashes);
     sig[i] = min over shingles of the i-th universal hash
     (a_i*x + b_i) mod P of the shingle's 31-bit content hash."""
-    hashed = F.transform(_word_shingles(3), lambda s: _spark_hash31(s))
     # One fold over the hashed shingles, updating all N_HASHES mins
-    # per element. The naive formulation — transform(sequence(0,15),
-    # i -> array_min(transform(hashed, affine_i))) — re-evaluates the
-    # md5 shingle hashing once per hash function (16x the dominant
-    # cost; a projection boundary doesn't help, CollapseProject
-    # re-inlines it). aggregate() evaluates its input array exactly
-    # once, so each shingle is md5-hashed once and then touched only
-    # by cheap integer affine maps.
+    # per element. The hashed array is the fold's INPUT, which
+    # aggregate() evaluates once per row; written as
+    # transform(sequence(0,15), i -> array_min(transform(hashed,
+    # affine_i))) the array would sit inside a lambda body, and
+    # CollapseProject inlines a once-referenced projection there, so
+    # the md5 hashing would run once per hash function (16x).
     sig = F.aggregate(
-        hashed,
+        F.col("hs"),
         F.array_repeat(F.lit(P31).cast("bigint"), N_HASHES),
         lambda acc, x: F.zip_with(
             acc,
@@ -146,44 +193,38 @@ def minhash_sig_df(d: DataFrame) -> DataFrame:
             lambda m, v: F.least(m, v),
         ),
     )
-    return (
-        d.where(F.size(tokens_col()) >= 3)
-        .select("doc_id", sig.alias("sig"))
+    return shingle_hashes(d, 3, _spark_hash31, explode=False).select(
+        "doc_id", sig.alias("sig")
     )
 
 
 def minhash_sig_agg_df(d: DataFrame) -> DataFrame:
     """BATCH twin of minhash_sig_df — identical signature VALUES
     (same shingle hash, same affine family, same mins; the two are
-    pinned byte-equal by tests/test_dedup_blocking.py), ~10× faster.
+    pinned byte-equal by tests/test_dedup_blocking.py).
 
-    The expression fold above runs through Catalyst's interpreted
-    higher-order functions: every shingle allocates a fresh
-    16-element accumulator array and evaluates a nested
-    transform/zip_with lambda tree outside whole-stage codegen —
-    measured ~14 ms/doc, 97% of the bucketed admit drain's x100 wall
-    (BENCH_SCALE100 x100_profile.bands_s). This formulation stays
-    entirely inside codegen: explode the hashed shingles once, derive
-    the N_HASHES affine images as flat integer columns, and take
-    per-doc mins with a hash aggregate. Map-side partial aggregation
-    collapses the exploded rows before the (doc_id-keyed) exchange,
-    so the shuffle carries one 16-column row per doc — at 100 TB the
-    explode never materializes off-core.
+    Instead of the fold's per-shingle 16-element accumulator arrays,
+    this explodes the hashed shingles once, derives the N_HASHES
+    affine images as flat integer columns inside whole-stage codegen,
+    and takes per-doc mins with a hash aggregate. Map-side partial
+    aggregation collapses the exploded rows before the
+    (doc_id-keyed) exchange, so the shuffle carries one 16-column row
+    per doc — at 100 TB the explode never materializes off-core.
+    Shingling, not the fold, dominated both twins: at sf0.1 (5k docs,
+    4 cores) the fold took 4.5 s and this twin 3.7 s with the
+    tokenizer inlined into the n-gram lambda, 1.2 s and 1.1 s on
+    :func:`shingle_hashes`' bound tokens.
 
     Batch-only: the groupBy makes it a streaming AGGREGATION on an
     unbounded input (breaking downstream stream-static joins), so
     readStream paths (stream_minhash_ingest) keep the expression
     fold; foreachBatch folds and materializers use this."""
-    hashed = F.transform(_word_shingles(3), lambda s: _spark_hash31(s))
     mins = [
-        F.min(((i * 31 + 17) * F.col("_x") + i * 7919 + 3) % P31).alias(
-            f"_s{i}"
-        )
+        F.min(((i * 31 + 17) * F.col("h") + i * 7919 + 3) % P31).alias(f"_s{i}")
         for i in range(N_HASHES)
     ]
     return (
-        d.where(F.size(tokens_col()) >= 3)
-        .select("doc_id", F.explode(hashed).alias("_x"))
+        shingle_hashes(d, 3, _spark_hash31)
         .groupBy("doc_id")
         .agg(*mins)
         .select(
@@ -283,17 +324,7 @@ def sig_bands(sig_df: DataFrame) -> DataFrame:
 
 
 _DUCK_SIG_CTE = f"""
-toks AS (
-  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\W+'),
-                             x -> x <> '') AS t
-  FROM documents
-),
-hashed AS (
-  SELECT doc_id,
-         list_transform({_DUCK_SHINGLES3},
-                        s -> {_DUCK_HASH31.format(expr='s')}) AS hs
-  FROM toks WHERE len(t) >= 3
-),
+{duck_shingles("hashed", 3, hash_sql=_DUCK_HASH31, out="hs", explode=False)},
 sigs AS (
   SELECT doc_id,
          list_transform(generate_series(0, {N_HASHES - 1}),
@@ -511,23 +542,28 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents", widen=True)
     t = tokens_col()
-    hs = F.transform(
-        t, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-    )
-    # nested higher-order aggregate with a per-bit shift: the Python
-    # shiftright/shiftleft wrappers require literal shift amounts, so
-    # the expression is written in SQL where lambda vars are allowed
+    # The per-bit vote sums are ONE fold over the token hashes, and
+    # the sign test runs over the fold's result: both arrays are
+    # higher-order-function INPUTS, evaluated once per row. Read
+    # inside a per-bit lambda instead (transform(sequence(0, 15),
+    # j -> aggregate(hs, ...))), CollapseProject would inline the
+    # once-referenced tokenize+md5 projection there and run it 16
+    # times per row. SQL, because the Python shiftright/shiftleft
+    # wrappers require literal shift amounts.
+    bits = f"sequence(0, {N_SIMHASH_BITS - 1})"
     simhash_sql = f"""
     aggregate(
-      transform(sequence(0, {N_SIMHASH_BITS - 1}),
-        j -> CASE WHEN aggregate(hs, 0L,
-                       (acc, x) -> acc + ((shiftright(x, j) & 1) * 2 - 1)) > 0
-             THEN shiftleft(1L, j) ELSE 0L END),
+      zip_with(
+        aggregate(hs, array_repeat(0L, {N_SIMHASH_BITS}),
+          (acc, x) -> zip_with(acc, {bits},
+                               (v, j) -> v + ((shiftright(x, j) & 1) * 2 - 1))),
+        {bits},
+        (v, j) -> CASE WHEN v > 0 THEN shiftleft(1L, j) ELSE 0L END),
       0L, (acc, v) -> acc + v) AS simhash
     """
     sims = (
         d.where(F.size(t) > 0)
-        .select("doc_id", hs.alias("hs"))
+        .select("doc_id", F.transform(t, shared_hash64).alias("hs"))
         .selectExpr("doc_id", simhash_sql)
     )
     return sims.withColumn(
@@ -559,17 +595,7 @@ NGRAM_POSTING_CAP = 512
 @query(
     "ngram_jaccard_dedup",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, lang, {_DUCK_TOKENS} AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, lang,
-         unnest(list_transform(
-             list_distinct(list_transform(generate_series(1, len(t) - 3),
-                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])),
-             g -> ('0x' || substr(md5(g), 1, 15))::BIGINT)) AS h
-  FROM toks WHERE len(t) >= 4
-),
+WITH {duck_shingles("sh", 4, "doc_id, lang")},
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -612,15 +638,7 @@ def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-hashes the corpus (profiled: 3 stages x ~20 s executor run at
     # sf0.1, ~the whole key). The narrow (doc_id, lang, h) rows are
     # the cheap proxy the heavy work reduces to (guide §8).
-    sh = truncate_lineage(
-        d.where(F.size(tokens_col()) >= 4).select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-            ).alias("h"),
-        )
-    )
+    sh = truncate_lineage(shingle_hashes(d, 4, keep_cols=("doc_id", "lang")))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     inter = (
         salted_bucket_pairs(
@@ -663,17 +681,7 @@ PREFIX_JACCARD_MIN = 0.5
 @query(
     "allpairs_prefix_jaccard",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, lang, {_DUCK_TOKENS} AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, lang,
-         unnest(list_transform(
-             list_distinct(list_transform(generate_series(1, len(t) - 3),
-                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])),
-             g -> ('0x' || substr(md5(g), 1, 15))::BIGINT)) AS h
-  FROM toks WHERE len(t) >= 4
-),
+WITH {duck_shingles("sh", 4, "doc_id, lang")},
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -733,17 +741,7 @@ def allpairs_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrays), and without the checkpoint each re-runs the
     # tokenize+md5 pipeline — measured 5x the whole key's wall at
     # sf0.1 (the lsh_eval_pr discipline: audit inputs run once)
-    sh = (
-        d.where(F.size(tokens_col()) >= 4)
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-            ).alias("h"),
-        )
-        .localCheckpoint()
-    )
+    sh = shingle_hashes(d, 4, keep_cols=("doc_id", "lang")).localCheckpoint()
     dfreq = sh.groupBy("lang", "h").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "h")
     ranked = (
@@ -1048,17 +1046,7 @@ BENCH_DOC_MAX = 50  # doc_id < 50 plays the held-out benchmark set
 @query(
     "contamination_check",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         unnest(list_transform(
-             list_distinct(list_transform(generate_series(1, len(t) - 3),
-                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])),
-             g -> ('0x' || substr(md5(g), 1, 15))::BIGINT)) AS h
-  FROM toks WHERE len(t) >= 4
-),
+WITH {duck_shingles("sh", 4)},
 bench AS (SELECT DISTINCT h FROM sh WHERE doc_id < {BENCH_DOC_MAX})
 SELECT c.doc_id, count(*) AS n_hits
 FROM sh c JOIN bench b USING (h)
@@ -1076,15 +1064,8 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically). At 100 TB the corpus shingles never shuffle, only
     the per-doc hit counts do. Documents with any overlap are the
     candidates a pretrain pipeline quarantines before training."""
-    from sfdc_cdc_aws_spark.operators.text import shared_hash64
-
     d = load_table(spark, sf_dir, "documents", widen=True)
-    sh = d.where(F.size(tokens_col()) >= 4).select(
-        "doc_id",
-        F.explode(
-            F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-        ).alias("h"),
-    )
+    sh = shingle_hashes(d, 4)
     bench = F.broadcast(
         sh.where(F.col("doc_id") < BENCH_DOC_MAX).select("h").distinct()
     )
@@ -1099,17 +1080,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "decontaminate_anti",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         unnest(list_transform(
-             list_distinct(list_transform(generate_series(1, len(t) - 3),
-                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])),
-             g -> ('0x' || substr(md5(g), 1, 15))::BIGINT)) AS h
-  FROM toks WHERE len(t) >= 4
-),
+WITH {duck_shingles("sh", 4)},
 bench AS (SELECT DISTINCT h FROM sh WHERE doc_id < {BENCH_DOC_MAX}),
 contaminated AS (
   SELECT DISTINCT c.doc_id FROM sh c JOIN bench b USING (h)
@@ -1130,15 +1101,8 @@ def decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     final anti-join broadcasts; the shingle side reuses the same
     narrow hashed-shingle plan — at 100 TB nothing but 8-byte hashes
     and doc ids ever shuffles."""
-    from sfdc_cdc_aws_spark.operators.text import shared_hash64
-
     d = load_table(spark, sf_dir, "documents", widen=True)
-    sh = d.where(F.size(tokens_col()) >= 4).select(
-        "doc_id",
-        F.explode(
-            F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-        ).alias("h"),
-    )
+    sh = shingle_hashes(d, 4)
     bench = F.broadcast(
         sh.where(F.col("doc_id") < BENCH_DOC_MAX).select("h").distinct()
     )
@@ -1365,17 +1329,7 @@ LSH_EVAL_JACCARD = 0.5  # "true near-duplicate" bar for the eval
     "lsh_eval_pr",
     oracle=f"""
 WITH {_DUCK_LSH_PAIRS_CTE},
-jtoks AS (
-  SELECT doc_id, lang, {_DUCK_TOKENS} AS t FROM documents
-),
-jsh AS (
-  SELECT doc_id, lang,
-         unnest(list_transform(
-             list_distinct(list_transform(generate_series(1, len(t) - 3),
-                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])),
-             g -> ('0x' || substr(md5(g), 1, 15))::BIGINT)) AS h
-  FROM jtoks WHERE len(t) >= 4
-),
+{duck_shingles("jsh", 4, "doc_id, lang")},
 jsizes AS (SELECT doc_id, count(*) AS n FROM jsh GROUP BY doc_id),
 jinter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -1472,15 +1426,7 @@ est AS (
   JOIN sigs sa ON sa.doc_id = c.doc_a
   JOIN sigs sb ON sb.doc_id = c.doc_b
 ),
-jtoks AS (
-  SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
-),
-jsh AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(generate_series(1, len(t) - 2),
-             i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS g
-  FROM jtoks WHERE len(t) >= 3
-),
+{duck_shingles("jsh", 3, hash_sql=None, out="g")},
 jsizes AS (SELECT doc_id, count(*) AS n FROM jsh GROUP BY doc_id),
 jinter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -1556,23 +1502,7 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").join(
         PF.broadcast(cand_docs), "doc_id", "left_semi"
     )
-    t = tokens_col()
-    sh = (
-        d.where(PF.size(t) >= 3)
-        .select(
-            "doc_id",
-            PF.explode(
-                PF.array_distinct(
-                    PF.expr(
-                        "transform(sequence(1, size(filter(split(lower(text),"
-                        " '\\\\W+'), x -> x != '')) - 2), i -> concat_ws(' ',"
-                        " slice(filter(split(lower(text), '\\\\W+'),"
-                        " x -> x != ''), i, 3)))"
-                    )
-                )
-            ).alias("g"),
-        )
-    )
+    sh = shingle_hashes(d, 3, hash_fn=None).withColumnRenamed("h", "g")
     sizes = sh.groupBy("doc_id").agg(PF.count("*").alias("n"))
     a = sh.select(PF.col("doc_id").alias("doc_a"), "g")
     b = sh.select(PF.col("doc_id").alias("doc_b"), PF.col("g").alias("gb"))
@@ -1747,14 +1677,7 @@ WITH {_DUCK_LSH_PAIRS_CTE},
 etoks AS (
   SELECT doc_id, lang, {_DUCK_TOKENS} AS t FROM documents
 ),
-g4 AS (
-  SELECT doc_id, lang,
-         unnest(list_transform(
-             list_distinct(list_transform(generate_series(1, len(t) - 3),
-                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])),
-             g -> ('0x' || substr(md5(g), 1, 15))::BIGINT)) AS h
-  FROM etoks WHERE len(t) >= 4
-),
+{duck_shingles("g4", 4, "doc_id, lang")},
 g4sizes AS (SELECT doc_id, count(*) AS n FROM g4 GROUP BY doc_id),
 g4inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -1911,14 +1834,8 @@ def neardup_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation consumed by two sides of a join runs twice)
     d = load_table(spark, sf_dir, "documents", widen=True)
     shs = (
-        d.where(F.size(tokens_col()) >= 4)
-        .select(
-            "doc_id",
-            "lang",
-            F.array_distinct(
-                F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-            ).alias("hs"),
-        )
+        shingle_hashes(d, 4, keep_cols=("doc_id", "lang"), explode=False)
+        .select("doc_id", "lang", F.array_distinct("hs").alias("hs"))
         .withColumn("n", F.size("hs"))
         .persist()
     )

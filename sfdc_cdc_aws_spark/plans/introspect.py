@@ -101,3 +101,35 @@ def has_partial_aggregate(df: DataFrame) -> bool:
     (``partial_...`` function markers) feeding a final aggregate —
     i.e. the shuffle carries combined state, not raw rows."""
     return bool(re.search(r"\bpartial_", plan_string(df)))
+
+
+def optimized_plan_string(df: DataFrame) -> str:
+    """The optimized logical plan as text with every field printed
+    (no ``... N more fields`` cut in wide projections)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    # (verbose, addSuffix, maxFields, printOperatorId, printOutputColumns)
+    return plan.treeString(True, False, 2**31 - 1, False, False)
+
+
+# the engine's tokenizer (text.tokens_col) applied to a row's text column
+_ROW_TOKENIZER = re.compile(r"split\(lower\(text#\d+")
+
+
+def tokenizer_in_lambda(df: DataFrame) -> int:
+    """How many higher-order-function lambda bodies in the optimized
+    plan tokenize the row's ``text``. Each such body re-runs the
+    tokenizer once per array element — the quadratic shape a
+    ``tokens_col()`` expression captured inside an n-gram lambda
+    produces; bound to a column first, it runs once per row and the
+    count is 0. Each plan node is one line; a line cut short (scan
+    metadata) closes its open lambdas at the line's end."""
+    n = 0
+    for line in optimized_plan_string(df).splitlines():
+        for m in re.finditer(r"lambdafunction\(", line):
+            depth, i = 1, m.end()
+            while depth and i < len(line):
+                depth += {"(": 1, ")": -1}.get(line[i], 0)
+                i += 1
+            if _ROW_TOKENIZER.search(line, m.end(), i):
+                n += 1
+    return n

@@ -16,8 +16,33 @@ import pyarrow.parquet as pq
 
 from sfdc_cdc_aws_spark.operators.dedup import NGRAM_POSTING_CAP, ngram_jaccard_dedup
 
+from .conftest import SF_ORACLE
+
 SF = "/root/testdata/sf0.001"
 N_HOT = NGRAM_POSTING_CAP + 88  # posting list above the cap
+
+
+def _inline_shingles(n, hash_fn):
+    """The shingle SPEC, independent of dedup.shingle_hashes: the
+    distinct word n-grams of ``text`` with the tokenizer captured as
+    an expression inside the n-gram lambda (the formulation the
+    engine used before the tokens were bound to a column: slow, as
+    the tokenizer re-runs per element, but the same values), hashed
+    by ``hash_fn`` unless it is None."""
+    from pyspark.sql import functions as F
+
+    from sfdc_cdc_aws_spark.operators.text import tokens_col
+
+    t = tokens_col()
+    grams = F.when(
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(t) - (n - 1)),
+            lambda i: F.concat_ws(" ", *[F.element_at(t, i + j) for j in range(n)]),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    grams = F.array_distinct(grams)
+    return grams if hash_fn is None else F.transform(grams, hash_fn)
 
 
 def _write_documents(path):
@@ -419,7 +444,6 @@ def test_allpairs_prefix_actually_prunes(spark):
 
     from sfdc_cdc_aws_spark.operators.dedup import (
         PREFIX_JACCARD_MIN,
-        _word_shingles,
         allpairs_prefix_jaccard,
     )
     from sfdc_cdc_aws_spark.operators.text import shared_hash64, tokens_col
@@ -437,9 +461,7 @@ def test_allpairs_prefix_actually_prunes(spark):
     sh = d.where(F.size(tokens_col()) >= 4).select(
         "doc_id",
         "lang",
-        F.explode(
-            F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-        ).alias("h"),
+        F.explode(_inline_shingles(4, shared_hash64)).alias("h"),
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     inter = (
@@ -492,3 +514,33 @@ def test_minhash_sig_agg_df_byte_equals_expression_fold(spark):
     fold = {r.doc_id: list(r.sig) for r in minhash_sig_df(docs).collect()}
     agg = {r.doc_id: list(r.sig) for r in minhash_sig_agg_df(docs).collect()}
     assert fold == agg and len(fold) > 0
+
+
+def test_shingle_hashes_byte_equals_inline_spec(spark):
+    """The bound-token kernel returns, row for row, what the inline
+    spec returns at sf0.01, in each form the engine consumes: 4-gram
+    md5 rows with lang (the Jaccard and contamination keys), 3-gram
+    31-bit arrays (the MinHash fold) and 3-gram strings (the MinHash
+    estimator audit)."""
+    from pyspark.sql import functions as F
+
+    from sfdc_cdc_aws_spark.operators.dedup import _spark_hash31, shingle_hashes
+    from sfdc_cdc_aws_spark.operators.text import shared_hash64, tokens_col
+    from sfdc_cdc_aws_spark.sources import load_table
+
+    d = load_table(spark, SF_ORACLE, "documents", widen=True)
+    for n, fn, keep, explode in (
+        (4, shared_hash64, ("doc_id", "lang"), True),
+        (3, _spark_hash31, ("doc_id",), False),
+        (3, None, ("doc_id",), True),
+    ):
+        grams = _inline_shingles(n, fn)
+        spec = d.where(F.size(tokens_col()) >= n).select(
+            *keep, F.explode(grams).alias("h") if explode else grams.alias("hs")
+        )
+        got = shingle_hashes(d, n, fn, keep, explode)
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in spec.schema
+        ]
+        rows = sorted(tuple(r) for r in got.collect())
+        assert rows and rows == sorted(tuple(r) for r in spec.collect())

@@ -823,3 +823,54 @@ def test_quartet_ann_probe_only_batch_side_shuffles(spark):
     assert "commit_batch" in plan and "PartitionFilters" in plan
     idx_scan = [ln for ln in plan.splitlines() if "quartet_vbkt_" in ln]
     assert idx_scan and all("Exchange" not in ln for ln in idx_scan)
+
+
+def test_no_key_tokenizes_inside_a_lambda(spark):
+    """No registry key's optimized plan evaluates the tokenizer over
+    the row's text inside a higher-order-function lambda body: there
+    it re-runs once per array element (quadratic in document length
+    for an n-gram lambda) instead of once per row. Planning only; the
+    keys whose builders drain a stream return a checkpoint scan with
+    no plan to inspect and are skipped, as in tools/plan_audit.py."""
+    from sfdc_cdc_aws_spark.plans.introspect import tokenizer_in_lambda
+    from tools.plan_audit import MATERIALIZED_KEYS, MATERIALIZED_PREFIXES
+
+    offenders = {}
+    for name in sorted(SPECS):
+        if name.startswith(MATERIALIZED_PREFIXES) or name in MATERIALIZED_KEYS:
+            continue
+        n = tokenizer_in_lambda(_df(spark, name))
+        if n:
+            offenders[name] = n
+    assert offenders == {}
+
+
+def test_shingle_kernel_binds_tokens_once_per_scan(spark):
+    """shingle_hashes tokenizes in ONE Project per documents scan,
+    below the explode (and below the MinHash fold), and CollapseProject
+    does not inline that Project back into the n-gram lambda."""
+    import re
+
+    from sfdc_cdc_aws_spark.operators.dedup import minhash_sig_df, shingle_hashes
+    from sfdc_cdc_aws_spark.plans.introspect import (
+        optimized_plan_string,
+        tokenizer_in_lambda,
+    )
+    from sfdc_cdc_aws_spark.sources import load_table
+
+    d = load_table(spark, SF, "documents", widen=True)
+    for df, top in (
+        (shingle_hashes(d, 4, keep_cols=("doc_id", "lang")), "Generate explode("),
+        (minhash_sig_df(d), "Project [doc_id#"),
+    ):
+        lines = optimized_plan_string(df).splitlines()
+        scans = [i for i, ln in enumerate(lines) if "Relation [" in ln]
+        binds = [
+            i
+            for i, ln in enumerate(lines)
+            if "Project [" in ln and re.search(r"split\(lower\(text#\d+.* AS _t#", ln)
+        ]
+        assert len(scans) == 1 and len(binds) == 1, lines
+        assert lines[0].startswith(top) and "_t#" in lines[0]
+        assert 0 < binds[0] < scans[0]
+        assert tokenizer_in_lambda(df) == 0

@@ -79,18 +79,12 @@ def headroom_sql(con) -> dict:
         NGRAM_POSTING_CAP,
         ROWS_PER_BAND,
         _DUCK_SIG_CTE,
+        duck_shingles,
     )
-    from sfdc_cdc_aws_spark.operators.text import _DUCK_TOKENS
 
     ngram = con.sql(
         f"""
-WITH toks AS (SELECT doc_id, lang, {_DUCK_TOKENS} AS t FROM documents),
-sh AS (
-  SELECT doc_id, lang,
-         unnest(list_distinct(list_transform(generate_series(1, len(t) - 3),
-             i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS g
-  FROM toks WHERE len(t) >= 4
-),
+WITH {duck_shingles("sh", 4, "doc_id, lang", hash_sql=None, out="g")},
 lists AS (SELECT lang, g, count(*) AS c FROM sh GROUP BY 1, 2)
 SELECT max(c) AS max_list,
        sum(CASE WHEN c > {NGRAM_POSTING_CAP} THEN 1 ELSE 0 END) AS over_cap
